@@ -1,6 +1,47 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Graded bench: the median-of-N wall time of every registered query's
+  * `count()`, summed. Prints exactly one bounded JSON line on stdout
+  * ([[summaryLine]]) and appends the full per-query line to the ledger
+  * (`SPARK_GRAFT_BENCH_OUT`, default `bench/bench_full.jsonl`).
+  *
+  * Perf claims are made with `perfbench/` (process CPU, bytes and a
+  * per-layer trace, parent vs change); this main only keeps the graded
+  * wall-clock number and its per-query spread.
+  */
 object Bench {
+  /** Upper-mid median: the element at index n/2 of the sorted sample
+    * (for an even n, the larger of the two middle values). */
+  def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+
+  private def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
+
+  /** JSON string literal for a raw external string (the SF path is the
+    * one such field; query names and the fixtures hex are
+    * [A-Za-z0-9_]+ by construction and need no escaping). */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The bench line. Without `perQuery` it is the stdout summary: no
+    * per-query map, so its length is bounded whatever the registry
+    * holds (a runner may keep only a short stdout tail). `failed` is
+    * the number of queries with at least one thrown rep — their
+    * elapsed times are time-to-fail, not measurements — and is absent
+    * when every rep ran. `perQuery` is the ledger's
+    * `[,"failed_reps":{…}],"spread":{…}` fragment.
+    */
+  def summaryLine(total: Double, totalMin: Double, nQueries: Int,
+                  failed: Int, fixtures: String, reps: Int, ts: Long,
+                  sfDir: String, perQuery: String = ""): String = {
+    val failedField = if (failed > 0) s""","failed":$failed""" else ""
+    s"""{"metric":"total","value":$total,"unit":"sec","total_min":${r4(totalMin)},"n_queries":$nQueries$failedField$perQuery,"fixtures":"$fixtures","reps":$reps,"ts":$ts,"sf":${jsonString(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,343 +80,67 @@ object Bench {
       catch { case _: Throwable => () }
     }
     // Median-of-N per query: single samples on a shared sandbox swing
-    // 5–30× run-to-run (documented in VERDICT round 3), which makes
-    // round-over-round deltas pure noise. The median of 3 back-to-back
-    // runs keeps the one-line {"metric":"total"} contract while
-    // discarding the GC/IO spike that poisons any one sample.
+    // 5–30× run-to-run (documented in VERDICT round 3); the median of
+    // back-to-back reps discards the GC/IO spike that poisons any one.
     //
     // Bench contract: WARM steady-state. Queries with one-time build
     // side effects (q35 persisted centroids, q52 sink table, q53 Derby
-    // db) pay that build in rep 1 and reuse it in reps 2-3, so their
-    // median reports the nightly steady-state cost — deliberately, as
-    // that is what the reference's nightly re-runs pay; the one-time
-    // ingest/build cost shows up in rep-1 (visible in the max of the
-    // spread and in driver stderr), not in the median. Since r11 the
-    // content-keyed ingest artifacts (q35 centroids, q56/q89
-    // pairs/components, q99 partitioned layout, q45 bucketed tables,
-    // q93 standing band index — Fixtures.scala) can survive from a PREVIOUS
-    // JVM on identical fixture bytes, in which case even rep 1 is a
-    // read: by design — that is the artifact's steady state — and
-    // visible in the artifact trail (a line whose q56 max ≈ med read
-    // a pre-built artifact; one with max >> med built it).
-    // ONE median rule for emitted medians AND the machine-state
-    // verdict (same argument as BenchStamp: two local copies of the
-    // upper-mid convention could silently drift from the adjudicator)
-    def median(xs: Seq[Double]): Double = BenchLine.median(xs)
-    // dev knob for adjudication runs (comma-separated names): measure a
-    // subset IN BENCH CONTEXT — same session, same warm-up, same order.
-    // Unset (the driver's case) = all queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Ambient-load canary: a fixed CPU-only probe (no I/O, no table,
-    // nothing query-specific) timed immediately before each query's
-    // rep loop, plus the query's wall-clock offset from bench start.
-    // Round 10's driver run inflated EVERY query in the back half of
-    // the suite 2.7-4x — including pure codegen projections — which
-    // reads as machine-wide external load, but the artifact alone
-    // couldn't prove it. With the canary series in the line the
-    // reading is direct: canary inflated at the same offset means the
-    // environment slowed down; canary flat while a query inflates
-    // means the query did.
-    // 2M ids: sum(id²) ≈ 2.7e18 stays under Long.Max (ANSI overflow
-    // throws; 4M would exceed it). A canary failure must never kill
-    // the bench — time it anyway and let the queries run.
-    // One probe per slowdown mechanism a shared sandbox has — CPU
-    // canary, fsync'd disk probe, own-JVM GC delta (the r11 flat-
-    // canary episode is why one probe is not enough; rationale and
-    // reading rule in AmbientProbes.scala / SCALING.md).
-    val probes = new AmbientProbes(spark)
-    probes.warmup()
-    val bench0 = System.nanoTime()
-    // failed reps per query, stamped into the emitted line itself.
-    // stderr alone proved insufficient in r12: a JVM launched without
-    // the jdk17 --add-opens set failed q92 in ALL reps, and the line
-    // recorded its time-to-fail (~0.5s) as a plausible median — a
-    // reader of the committed artifact had no way to know. A failed
-    // rep's elapsed time still participates in the spread (the
-    // contract is unchanged for clean runs), but any query with a
-    // nonzero fail count is named in the line's "failed" field.
+    // db, the content-keyed ingest artifacts in Fixtures.scala) pay
+    // that build in rep 1 — or in a previous JVM on identical fixture
+    // bytes — and reuse it afterwards, so their median reports the
+    // nightly steady-state cost; the one-time build shows in the max.
+    //
+    // A thrown rep is never silent: it goes to stderr and its query is
+    // counted in the line's "failed" field. Its elapsed time still
+    // joins the spread, so a reader must treat those numbers as
+    // time-to-fail (r12: a JVM without the jdk17 --add-opens set
+    // failed q92 in every rep and recorded ~0.5 s as its median).
     val failCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val results = selected.map { case (name, fn) =>
-      val tOff = (System.nanoTime() - bench0) / 1e9
-      val cn = probes.canary()
-      val ioT = probes.ioProbe()
-      val gc0 = probes.gcMillis()
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val samples = (1 to reps).map { i =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
-            // never silent: a broken query must be visible in the
-            // driver's stderr AND in the committed line's "failed"
-            // field, not just as a suspiciously fast median
             System.err.println(s"[bench] $name rep$i FAILED: ${e.getMessage}")
             failCounts(name) = failCounts.getOrElse(name, 0) + 1
         }
         (System.nanoTime() - t0) / 1e9
       }
-      val gcMs = probes.gcMillis() - gc0
-      (name, median(samples), samples.min, samples.max, tOff, cn, ioT, gcMs)
+      (name, median(samples), samples.min, samples.max)
     }
-    // ---- committed-history / floor context. Read BEFORE the re-rep
-    // step below: its eligibility bar is the committed per-query floor.
-    // fixture-content fingerprint (Fixtures.scala): the driver
-    // regenerates the test tables between rounds, so without this a
-    // builder-line vs driver-line delta can't rule out "different
-    // bytes" — with it, identical fingerprints close that question.
+    val total = results.map(_._2).sum
+    // min-sum: a transient stall inflates medians but rarely every rep
+    val totalMin = results.map(_._3).sum
+    // fixture-content fingerprint (Fixtures.scala): identical
+    // fingerprints rule out "different bytes" between two lines
     val fixtures = Fixtures.fingerprint(sfDir)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/bench_full.jsonl")
-    val history = scala.util.Try {
-      val p = java.nio.file.Paths.get(out)
-      if (java.nio.file.Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala.toSeq
-      else Seq.empty[String]
-    }.getOrElse(Seq.empty[String])
-    val baselines = BenchLine.parseBaselines(history)
-    // SPARK_GRAFT_FLOOR_SINCE (epoch secs, optional) is the documented
-    // rebaseline path (r15 ADVICE): after a deliberate, accepted
-    // code-level slowdown the record floor is obsolete — setting the
-    // cutoff excludes pre-shift lines from floor/cross computation,
-    // and the line records both the cutoff and the ts of the line that
-    // set the record (floor_ts) so the anchor is auditable.
-    // parse defensively (r16 ADVICE): a malformed value here used to
-    // throw AFTER all queries had run but BEFORE the result line was
-    // written — losing the whole run contradicts the "bench results
-    // must never be lost" posture. Malformed → warn and ignore.
-    val floorSince = sys.env.get("SPARK_GRAFT_FLOOR_SINCE").flatMap { raw =>
-      val parsed = raw.trim.toLongOption
-      if (parsed.isEmpty)
-        System.err.println(
-          s"[bench] ignoring malformed SPARK_GRAFT_FLOOR_SINCE='$raw'")
-      parsed
-    }
-    val floorBaselines = floorSince match {
-      case Some(cut) => baselines.filter(_.ts >= cut)
-      case None      => baselines
-    }
-    // ---- bounded storm-resistance re-reps (r19 VERDICT item 1, the
-    // round-20 graded-path change — ONE conf variable, default on so
-    // the driver's env-free run gets it, spec-pinned in BenchLineSpec,
-    // A/B-adjudicated same-boot before shipping). Four consecutive
-    // driver lines landed in ambient storms; their per-query minima
-    // were real executions of un-regressed code, yet the committed
-    // face value read 3–9× the band. At the END of the run — when a
-    // 10–20 min storm wave has often passed — queries whose min sits
-    // >1.5× their committed floor AND whose own probes flagged get up
-    // to SPARK_GRAFT_BENCH_REREP (default 2) extra reps, stopping
-    // early once the min drops under the bar. The kept per-query min
-    // is still a real measured execution, so total_min's definition
-    // is untouched; medians stay over the primary reps (the
-    // median-of-N contract is unchanged); every re-rep is stamped in
-    // the line's "rerep" field so a reader sees exactly which minima
-    // had the extra chance. Subset runs skip it (their floor context
-    // is suppressed anyway).
-    val rerepMax = sys.env.get("SPARK_GRAFT_BENCH_REREP").map { raw =>
-      raw.trim.toIntOption.filter(_ >= 0).getOrElse {
-        System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_BENCH_REREP='$raw'")
-        2
-      }
-    }.getOrElse(2)
-    val rerepCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val results2 = if (only.nonEmpty || rerepMax == 0) results else {
-      val floors = BenchLine.perQueryFloors(floorBaselines, fixtures)
-      val targets = BenchLine.rerepTargets(
-        results.map(r => r._1 -> r._3), floors, failCounts.keySet.toSet)
-      if (targets.isEmpty) results
-      else {
-        System.err.println(
-          s"[bench] storm-resistance re-rep (min >1.5x committed floor): " +
-            targets.mkString(","))
-        val fnByName = SparkEntry.queries
-        val extras = targets.map { name =>
-          val fn = fnByName(name)
-          val floor = floors(name)
-          var samples = List.empty[Double]
-          var mn = results.find(_._1 == name).get._3
-          var i = 0
-          while (i < rerepMax && mn > BenchLine.StormVsFloor * floor) {
-            i += 1
-            val t0 = System.nanoTime()
-            // same contract as a primary rep: a failure is visible in
-            // stderr AND in the line's "failed" field (which also
-            // suppresses the floor fields). But a time-to-fail elapsed
-            // must NOT update `mn` (r20 ADVICE): the re-rep was granted
-            // because the query looked slow, and a fast crash would
-            // both replace the genuine primary min and satisfy the
-            // early-stop bar. It still joins `samples` so the spread's
-            // max reflects it, like primary failed reps.
-            val ok = try { fn(spark, sfDir).count(); true } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name rerep$i FAILED: ${e.getMessage}")
-                failCounts(name) = failCounts.getOrElse(name, 0) + 1
-                false
-            }
-            val el = (System.nanoTime() - t0) / 1e9
-            samples ::= el
-            if (ok) mn = math.min(mn, el)
-          }
-          rerepCounts(name) = i
-          // mn already folds in only the OK re-rep samples; the raw
-          // sample list (failures included) feeds the spread's max
-          name -> (samples, mn)
-        }.toMap
-        results.map { case r @ (name, med, mn, mx, tOff, cn, ioT, gcMs) =>
-          extras.get(name).filter(_._1.nonEmpty) match {
-            case Some((ss, okMin)) =>
-              (name, med, math.min(mn, okMin), math.max(mx, ss.max),
-                tOff, cn, ioT, gcMs)
-            case None => r
-          }
-        }
-      }
-    }
-    val qs = results2.map { case (k, med, _, _, _, _, _, _) => s"\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    // per-query spread alongside the medians: a sandbox stall inflates
-    // max while min stays at steady state (max >> min flags noise); a
-    // real regression moves min and max together. Round 7 burned a
-    // judge re-run proving a +24% driver delta was a transient stall —
-    // with the spread in the artifact that reading is immediate.
-    def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
-    val spread = results2.map { case (k, med, mn, mx, _, _, _, _) =>
-      s"\"$k\":{\"min\":${r4(mn)},\"med\":${r4(med)},\"max\":${r4(mx)}}"
-    }.mkString("{", ",", "}")
-    // t = seconds since bench start when this query's reps began;
-    // canary/io = the CPU and disk probes' seconds right before them;
-    // gc = this JVM's GC milliseconds spent during the rep loop
-    val ambient = results2.map { case (k, _, _, _, tOff, cn, ioT, gcMs) =>
-      s"\"$k\":{\"t\":${r4(tOff)},\"canary\":${r4(cn)},\"io\":${r4(ioT)},\"gc\":$gcMs}"
-    }.mkString("{", ",", "}")
-    val total = results2.map(_._2).sum
-    // subset (adjudication) runs mark themselves so a reader of the
-    // committed history can't mistake an `only=` line for a full pass.
-    // The marker lists the queries actually SELECTED (not the raw env
-    // value): registry keys are [A-Za-z0-9_]+ so the field needs no
-    // JSON escaping, and a typo'd name can't appear while matching
-    // nothing.
-    val onlyField = only.map(_ =>
-      s""","only":"${selected.map(_._1).mkString(",")}"""").getOrElse("")
-    // run + boot identity: "same code, same data" still spans machine
-    // states (this round's 41.5s vs 48.5s floors were different boots
-    // under different co-tenant load), so every line records when it
-    // ran and which boot it ran in — two lines from different boots
-    // are not floor-comparable and the adjudicator can say so from
-    // the artifact alone. Derivation shared with DevScaleLadder
-    // (BenchStamp) so the two emitters can never drift.
-    val (nowSec, bootOpt) = BenchStamp.stamp()
-    // Storm-robust self-report (r11 VERDICT item 1): the r11 driver
-    // line read 59.6s inside an ambient episode the adjudicator flags,
-    // vs 44.5s in the same-boot calm window — but nothing in the line
-    // itself said so. Three fields close that: the contamination-
-    // robust min-sum, the count of probe-flagged queries, and a
-    // machine-state verdict against the last committed comparable
-    // line (same fixtures + boot, full suite). BenchLine.scala holds
-    // the rules (mirroring tools/bench_adjudicate.py); the history
-    // read must never kill the bench — a damaged jsonl degrades to
-    // "no-baseline".
-    val totalMin = results2.map(_._3).sum
-    val pf = BenchLine.probeFlagged(results2.map(r => (r._6, r._7)))
-    val msLineOverLine = BenchLine.machineState(baselines,
-      bootOpt, fixtures, results2.map(r => r._1 -> r._3).toMap,
-      failCounts.keySet.toSet)
-    // record-band self-report (r15, VERDICT item 4): machine_state
-    // compares against the most recent SAME-BOOT line, so a judge
-    // reading a calm-but-slow boot's line still sees nothing anchoring
-    // it to the code's demonstrated floor. floor_band = [record,
-    // record×1.2] across ALL committed comparable lines (any boot);
-    // vs_floor = this line's min-sum over the record. Absent on
-    // subset runs (their sums measure a different suite context) and
-    // when no comparable full line exists.
-    // cross_floor (r15): the quiesce experiment showed aged-boot lines
-    // inflate via stall SAMPLING (different rows each run), so the
-    // per-query floor summed across lines is the truthful code floor —
-    // three 44-49s lines combined to 38.1, in band. vs_cross anchors
-    // this line against that, the strictest demonstrated reference.
-    val keySet = results2.map(_._1).toSet
-    // floor fields are suppressed when this run recorded failures (r15
-    // ADVICE): totalMin would include time-to-fail minima, so vs_floor
-    // would compare a contaminated sum against a clean-line record —
-    // history lines with failures are excluded from the band, and the
-    // current line is held to the same rule. (machine_state survives:
-    // it excludes failed queries per-query.)
-    // (floorSince / floorBaselines are computed above, before the
-    // re-rep step — its eligibility floors must honor the same
-    // rebaseline cutoff the emitted band does.)
-    val sinceField = floorSince.map(c => s""","floor_since":$c""").getOrElse("")
-    val floorInfo = if (only.isEmpty && failCounts.isEmpty)
-      BenchLine.floorBand(floorBaselines, fixtures, keySet)
-    else None
-    val floorField = floorInfo match {
-      case Some((lo, hi, floorTs)) =>
-        val cross = BenchLine.crossFloor(floorBaselines, fixtures, keySet)
-          .map(cf => s""","cross_floor":${r4(cf)},"vs_cross":${r4(totalMin / cf)}""")
-          .getOrElse("")
-        s""","floor_band":[${r4(lo)},${r4(hi)}],"floor_ts":$floorTs,"vs_floor":${r4(totalMin / lo)}$cross$sinceField"""
-      case None => sinceField
-    }
-    // storm-proof the verdict against the absolute floor (r17 VERDICT
-    // item 1): line-over-line comparison reads an escalating multi-
-    // line storm as "calm" at every step — the r17 graded line said
-    // calm at vs_floor 6.26. The same vs_floor the line already
-    // carries is folded into the verdict itself (BenchLine.stormProof)
-    // so the one field a consumer trusts cannot contradict the band.
-    val ms = BenchLine.stormProof(msLineOverLine,
-      floorInfo.map { case (lo, _, _) => totalMin / lo })
-    // query names are [A-Za-z0-9_]+ (same argument as onlyField), so
-    // the failed map needs no JSON escaping; absent when all reps ran.
-    val failedField =
+    val ts = System.currentTimeMillis() / 1000
+    val failedMap =
       if (failCounts.isEmpty) ""
       else failCounts.map { case (k, v) => s""""$k":$v""" }
-        .mkString(""","failed":{""", ",", "}")
-    // which queries got storm-resistance re-reps, and how many each —
-    // a reader of the committed line must be able to see exactly which
-    // minima had the extra end-of-run chance (names are [A-Za-z0-9_]+,
-    // no escaping needed; absent when no re-rep ran)
-    val rerepField =
-      if (rerepCounts.isEmpty) ""
-      else rerepCounts.map { case (k, v) => s""""$k":$v""" }
-        .mkString(""","rerep":{""", ",", "}")
-    // sfDir is the ONE raw external string in the line (query names,
-    // fixtures hex, verdicts are [A-Za-z0-9_,]+ by construction) — a
-    // quote or backslash in the path would corrupt bench_full.jsonl
-    // and parseBaselines would silently drop the line from every
-    // future machine-state comparison (r14 review)
-    val sfJson = "\"" + sfDir.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_min":${r4(totalMin)},"probe_flagged":$pf,"machine_state":${ms.json}$floorField$failedField$rerepField,"queries":$qs,"spread":$spread,"ambient":$ambient,"fixtures":"$fixtures","reps":$reps${BenchStamp.fragment(nowSec, bootOpt)},"sf":$sfJson$onlyField}"""
-    println(line)
-    // The driver stores only a 2000-char tail of stdout, which
-    // truncates before ~80 of the 113 queries AND the total (round-8
-    // verdict: the spread was unreadable exactly when it was needed).
-    // So the full line is also appended to a committed repo file —
-    // bench history stays reviewable without the driver artifact.
+        .mkString(""","failed_reps":{""", ",", "}")
+    // per-query spread: a stall inflates max while min stays at steady
+    // state; a real regression moves min and max together. `med` is
+    // unrounded, so the meds sum to `value` exactly.
+    val spread = results.map { case (k, med, mn, mx) =>
+      s""""$k":{"min":${r4(mn)},"med":$med,"max":${r4(mx)}}"""
+    }.mkString(""","spread":{""", ",", "}")
+    val full = summaryLine(total, totalMin, results.size, failCounts.size,
+      fixtures, reps, ts, sfDir, perQuery = failedMap + spread)
+    // The per-query line goes to a ledger file, not stdout: bench
+    // history stays reviewable from the repository alone.
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/bench_full.jsonl")
     try {
       val p = java.nio.file.Paths.get(out)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"),
+      java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch { // bench results must never be lost to a write failure
       case e: Throwable => System.err.println(s"[bench] out-file write failed: ${e.getMessage}")
     }
-    // Compact summary as the VERY LAST stdout line (r15 VERDICT item
-    // 1): the driver keeps only a stdout tail and the full line's
-    // 113-entry per-query maps push the total out of it — three
-    // straight BENCH_rN.json artifacts read "parsed": null. This line
-    // has no per-query map, so the graded artifact always carries the
-    // total, floor anchors, and machine state whole. BenchLineSpec
-    // pins the shape; bench_full.jsonl keeps only full lines (the
-    // compact one has no spread and parseBaselines would drop it).
-    println(BenchLine.compactLine(total, totalMin, pf, ms.json, floorField,
-      failedField, results2.size, fixtures, reps,
-      BenchStamp.fragment(nowSec, bootOpt), sfJson, onlyField,
-      rerepped = rerepCounts.size))
+    println(summaryLine(total, totalMin, results.size, failCounts.size,
+      fixtures, reps, ts, sfDir))
     spark.stop()
   }
 }

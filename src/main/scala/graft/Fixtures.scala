@@ -13,10 +13,10 @@ import scala.jdk.CollectionConverters._
   * only AFTER the round's tests had run). Two consumers:
   *
   *   1. Run artifacts: Bench stamps the combined fingerprint into
-  *      every `bench_full.jsonl` line and Verify into its schema dump,
-  *      so a builder-run vs driver-run delta self-adjudicates against
-  *      fixture regeneration — identical fingerprints RULE OUT data
-  *      drift; different ones name it.
+  *      its stdout line and every `bench_full.jsonl` line, and Verify
+  *      into its schema dump, so a delta between two runs
+  *      self-adjudicates against fixture regeneration — identical
+  *      fingerprints RULE OUT data drift; different ones name it.
   *   2. Persisted ingest artifacts (q35 IVF centroids, the q56/q89
   *      near-dup pair/component tables): keyed by CONTENT, a cache
   *      survives across sessions on identical data and invalidates

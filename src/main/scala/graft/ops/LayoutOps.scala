@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
 object LayoutOps {
 
   /** Skew-bounded partitioned overwrite (r22, guide §6 + VERDICT r21
-    * finding 4) — the shared write path of q41 and entry()'s mart:
+    * finding 4) — the shared write path of q41, entry()'s mart and
+    * the nightly's staging commit (NightlyRun.commitSlice):
     *
     * A plain `repartition(partCol)` gives ONE task per distinct
     * partition value, so a hot value lands entirely in one task

@@ -201,7 +201,8 @@ object TextOps {
     // place of the old transform(sequence)/aggregate(slice) chain,
     // whose higher-order lambdas evaluate INTERPRETED per band per
     // row (measured: the banding stage dominated everything around it
-    // in DevPrefixStages; the unrolled form folds the same
+    // in DevPrefixStages, commit 2429ee1: 0.69 s → 0.14 s min at
+    // sf0.1; the unrolled form folds the same
     // acc → (acc << 31) ⊕ m arithmetic, bit-identical output).
     // element_at is 1-based and only reached under the size guard, so
     // no out-of-bounds path exists (ANSI-safe).
@@ -365,9 +366,9 @@ object TextOps {
     // parallelism instead of running in the checkpoint's (single, on
     // the fixture) partition. dfreq and the refinement's idxB keep
     // the un-repartitioned lineage — their aggregations reduce
-    // map-side / join on their own keys. Interleaved A/B (DevR22AB3,
-    // 9 reps calm): q37 end-to-end med 2.141 → 1.898 s, min 1.910 →
-    // 1.812; candidate rows bit-identical.
+    // map-side / join on their own keys. Interleaved A/B (commit
+    // cdb3fcd's harness, 9 reps calm): q37 end-to-end med 2.141 →
+    // 1.898 s, min 1.910 → 1.812; candidate rows bit-identical.
     val idxW = docShingles.repartition(col(idCol))
       .select(col(idCol), size(col(shCol)).as("_sz"),
         explode(col(shCol)).as("_tok"))

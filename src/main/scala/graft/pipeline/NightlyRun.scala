@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 
-import graft.ops.RelationalOps
+import graft.ops.{LayoutOps, RelationalOps}
 import graft.sources.{EnvelopeTransport, IngestFetch}
 
 /** The reference's actual nightly, end to end, as ONE Spark
@@ -178,8 +178,10 @@ object NightlyRun {
     * per-partition window where a directory is mid-move is the price
     * of raw parquet; a deployment with a transactional table format
     * would swap this method for a MERGE and keep every stage above
-    * unchanged. `repartition(sale_d)` before the write: one file per
-    * partition directory, not tasks × dirs (the q41 discipline).
+    * unchanged. The staging write goes through
+    * `LayoutOps.partitionedOverwrite`, the skew-bounded writer q41 and
+    * `entry()` share: one file per partition directory, not tasks ×
+    * dirs, and a hot date splits into bounded tasks.
     * Crash residue in `_staging` is removed on the next tick's
     * commit, and the root `_SUCCESS` only ever lands after a
     * complete swap — a tick that died mid-commit leaves either the
@@ -195,9 +197,7 @@ object NightlyRun {
     java.nio.file.Files.createDirectories(root)
     val staging = root.resolve("_staging")
     rm(staging.toFile)
-    merged.repartition(col("sale_d"))
-      .write.partitionBy("sale_d").mode("overwrite")
-      .parquet(staging.toString)
+    LayoutOps.partitionedOverwrite(merged, "sale_d", staging.toString)
     val staged = Option(staging.toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("sale_d="))
     staged.foreach { p =>

@@ -130,9 +130,10 @@ object NorthQueries {
       // so the partial agg passes raw rows through anyway; the saved
       // exchange + sort + partial-limit pass is pure win. Skew-safe:
       // TPC-H rows per supplier is a constant (~600) at any SF.
-      // Interleaved A/B (DevR22AB2, 7 reps): min 1.459 → 0.898 s,
-      // med 1.704 → 1.241 s; rows bit-identical (decimal sum is
-      // order-independent, window order fully tiebroken).
+      // Interleaved A/B (commit 27106f7's harness, 7 reps): min
+      // 1.459 → 0.898 s, med 1.704 → 1.241 s; rows bit-identical
+      // (decimal sum is order-independent, window order fully
+      // tiebroken).
       val rev = Tables.lineitem(s, d)
         .repartition(col("l_suppkey"))
         .groupBy(col("l_suppkey"), col("l_partkey"))

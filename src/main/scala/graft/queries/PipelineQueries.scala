@@ -232,9 +232,10 @@ object PipelineQueries {
       // (subset rule), removing the agg's own exchange; the typed
       // groupByKey hop downstream keeps its exchange (its key is a
       // generated column EnsureRequirements can't match), but it
-      // ships ≤k·groups rows either way. Interleaved A/B (DevR22AB2,
-      // 7 reps): min 1.382 → 1.059 s, med 1.879 → 1.304 s; rows
-      // bit-identical. Same skew/bytes analysis as q23.
+      // ships ≤k·groups rows either way. Interleaved A/B (commit
+      // 27106f7's harness, 7 reps): min 1.382 → 1.059 s, med
+      // 1.879 → 1.304 s; rows bit-identical. Same skew/bytes
+      // analysis as q23.
       val rev0 = Tables.lineitem(s, d)
         .repartition(col("l_suppkey"))
         .groupBy(col("l_suppkey"), col("l_partkey"))

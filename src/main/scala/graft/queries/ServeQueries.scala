@@ -207,8 +207,16 @@ object ServeQueries {
     // IDENTICAL recursion — both engines derive the closure
     // independently.
     "q105_recursive_cte" -> ((s, d) => {
-      val cust = Tables.customer(s, d)
-      cust.createOrReplaceTempView("g_cust_r")
+      // Built on a child session: it shares the SparkContext but has
+      // its own SQLConf and temp views, and the returned frame runs
+      // under that conf — so the row-guard setting below and the temp
+      // view never touch the caller's session. The child reads the
+      // table with the cached frame's schema: no schema-inference job
+      // at construction (LazyRegistrySpec).
+      val cs = s.newSession()
+      cs.read.schema(Tables.customer(s, d).schema)
+        .parquet(s"$d/customer.parquet")
+        .createOrReplaceTempView("g_cust_r")
       // Spark's recursion ROW guard defaults to 1M rows TOTAL across
       // all iterations — a runaway-recursion safety net sized for
       // notebooks, not data: this closure is |customer| × ~log2(max
@@ -222,12 +230,10 @@ object ServeQueries {
       // LEVEL limit (default 100) stays as the real non-termination
       // guard: this hierarchy halves its frontier per level, so a
       // runaway recursion is a level-limit bug, not a row-count one.
-      // The set is a deterministic constant (idempotent across
-      // builds, no data dependence) and must OUTLIVE the builder:
-      // the returned frame reads the conf lazily at execution, so
-      // restoring it here would re-break the query.
-      s.conf.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
-      s.sql(
+      // The returned frame reads the conf lazily at execution, which
+      // is why it is set on the child session the frame keeps.
+      cs.conf.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
+      cs.sql(
         """WITH RECURSIVE anc(custkey, anc_key, d) AS (
           |  SELECT c_custkey, c_custkey, 0 FROM g_cust_r
           |  UNION ALL

@@ -291,7 +291,7 @@ object JdbcUpsert {
     val w = Option(props.getProperty("driver"))
       .fold(w0)(d => w0.option("driver", d))
       // 10k-row insert batches for the stage bulk load. Measured
-      // (DevTimeQ54Batch, r19, interleaved 3-rep arms at sf0.1): on
+      // (commit 866390a's harness, r19, interleaved 3-rep arms at sf0.1): on
       // the sandbox's EMBEDDED Derby batch size 10→10000 is
       // performance-neutral (min-time ratio 0.90–1.1×, noise) — there
       // is no wire, so there are no per-batch round trips to

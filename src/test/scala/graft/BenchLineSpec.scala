@@ -1,332 +1,63 @@
 package graft
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the storm-robust bench-line self-report (BenchLine.scala,
-  * r11 VERDICT item 1): the parse of committed history lines, the
-  * machine-state verdict rule (mirroring tools/bench_adjudicate.py's
-  * MINSHIFT floor-drift check), and the intra-line probe-flag count.
-  * Pure functions — no SparkSession.
+/** Pins the graded bench line (Bench.summaryLine): the stdout line is
+  * one JSON object with exactly the graded fields and no per-query
+  * map, its length stays bounded however many queries fail, the one
+  * raw external string (the SF path) is escaped, and the median is the
+  * upper-mid rule. Pure functions — no SparkSession.
   */
 class BenchLineSpec extends AnyFunSuite {
 
-  private def mkLine(ts: Long, boot: Long, fixtures: String,
-                     qs: Map[String, (Double, Double)],
-                     only: Option[String] = None): String = {
-    val queries = qs.map { case (k, (med, _)) => s""""$k":$med""" }.mkString("{", ",", "}")
-    val spread = qs.map { case (k, (med, mn)) =>
-      s""""$k":{"min":$mn,"med":$med,"max":${med * 2}}"""
-    }.mkString("{", ",", "}")
-    val onlyF = only.map(o => s""","only":"$o"""").getOrElse("")
-    s"""{"metric":"total","value":1.0,"unit":"sec","queries":$queries,"spread":$spread,"fixtures":"$fixtures","reps":3,"ts":$ts,"boot":$boot,"sf":"x"$onlyF}"""
+  private def fields(line: String): Map[String, JValue] =
+    JsonMethods.parse(line) match {
+      case JObject(fs) => fs.toMap
+      case other       => fail(s"not a JSON object: $other")
+    }
+
+  test("stdout line parses as JSON with exactly the graded fields") {
+    val ln = Bench.summaryLine(52.17, 38.9, 113, 0, "3fccd702", 3, 100L,
+      "/data/sf0.1")
+    val f = fields(ln)
+    assert(f.keySet === Set("metric", "value", "unit", "total_min",
+      "n_queries", "fixtures", "reps", "ts", "sf"))
+    assert(f("metric") === JString("total"))
+    assert(f("value") === JDouble(52.17))
+    assert(f("unit") === JString("sec"))
+    assert(f("n_queries") === JInt(113))
+    assert(f("reps") === JInt(3))
+    assert(f("ts") === JInt(100))
+    assert(f("sf") === JString("/data/sf0.1"))
+    assert(!ln.contains("\n"), "one line")
+    // the ledger line is the same line plus the per-query fragment
+    val full = fields(Bench.summaryLine(52.17, 38.9, 113, 0, "3fccd702", 3,
+      100L, "x", perQuery = ""","spread":{"q1":{"min":1.0,"med":2.0,"max":3.0}}"""))
+    assert(full.contains("spread") && full("value") === JDouble(52.17))
   }
 
-  // five queries, all over the MIN_SECS floor, min = 0.9 × med
-  private val calmQs: Map[String, (Double, Double)] =
-    (1 to 5).map(i => s"q$i" -> (1.0 + i * 0.1, 0.9 * (1.0 + i * 0.1))).toMap
-
-  test("parseBaselines keeps full stamped lines, drops subset/malformed/unstamped ones") {
-    val good = mkLine(100, 50, "abc", calmQs)
-    val subset = mkLine(200, 50, "abc", calmQs, only = Some("q1"))
-    val noSpread = """{"metric":"total","value":1.0,"queries":{"q1":1.0},"fixtures":"abc","ts":300,"boot":50}"""
-    val garbage = "not json at all {"
-    val bs = BenchLine.parseBaselines(Seq(good, subset, noSpread, garbage))
-    assert(bs.map(_.ts) === Seq(100L))
-    assert(bs.head.boot === Some(50L))
-    assert(bs.head.mins("q3") === 0.9 * 1.3)
-    assert(bs.head.meds("q3") === 1.3)
+  test("stdout line stays under 2000 chars when every query failed") {
+    val names = SparkEntry.queries.keys.toSeq
+    assert(names.size === 113)
+    val ln = Bench.summaryLine(1234.5678, 999.1234, names.size, names.size,
+      "3fccd702", 3, 1786000000L, "/data/sf0.1")
+    val f = fields(ln)
+    assert(f("failed") === JInt(113))
+    assert(names.forall(n => !ln.contains(n)), "no per-query names on stdout")
+    assert(ln.length < 2000, s"line must fit a short stdout tail: ${ln.length}")
   }
 
-  test("machine-state verdict: calm / storm / faster against the same-boot baseline") {
-    val hist = BenchLine.parseBaselines(Seq(mkLine(100, 50, "abc", calmQs)))
-    def verdictAt(factor: Double): String =
-      BenchLine.machineState(hist, Some(50L), "abc",
-        calmQs.map { case (k, (_, mn)) => k -> mn * factor }).verdict
-    assert(verdictAt(1.0) === "calm")
-    assert(verdictAt(1.19) === "calm")   // just under MINSHIFT
-    assert(verdictAt(1.25) === "storm")  // floors inflated together
-    assert(verdictAt(0.7) === "faster")  // the BASELINE was the stormy one
-    val ms = BenchLine.machineState(hist, Some(50L), "abc",
-      calmQs.map { case (k, (_, mn)) => k -> mn * 1.3 })
-    assert(ms.minRatio.exists(r => math.abs(r - 1.3) < 1e-9))
-    assert(ms.n === 5 && ms.vsTs === Some(100L))
+  test("sf is escaped when the path holds a quote, backslash or control char") {
+    val raw = "/data/a\"b\\c\td\u0001e"
+    val f = fields(Bench.summaryLine(1.0, 1.0, 1, 0, "abc", 3, 1L, raw))
+    assert(f("sf") === JString(raw))
   }
 
-  test("stormProof: an escalating multi-line storm cannot self-label calm (r17 item 1)") {
-    // The r17 failure mode, synthesized: lines ramp 1.15× line-over-
-    // line (under MINSHIFT, so machineState reads "calm" at EVERY
-    // step) while the absolute floor ratio compounds past StormVsFloor.
-    val ramp = Seq(1.0, 1.15, 1.32, 1.52, 1.75)
-    val hist = BenchLine.parseBaselines(ramp.zipWithIndex.map { case (f, i) =>
-      mkLine(100 + i * 100, 50, "abc",
-        calmQs.map { case (k, (md, mn)) => k -> (md * f, mn * f) })
-    })
-    val floorMinSum = calmQs.values.map(_._2).sum           // the ts=100 record
-    val curFactor = 2.0                                      // next rung of the ramp
-    val mins = calmQs.map { case (k, (_, mn)) => k -> mn * curFactor }
-    val lol = BenchLine.machineState(hist, Some(50L), "abc", mins)
-    assert(lol.verdict === "calm")                           // the gap, reproduced
-    val vsFloor = mins.values.sum / floorMinSum              // = 2.0, way over band
-    val proofed = BenchLine.stormProof(lol, Some(vsFloor))
-    assert(proofed.verdict === "storm")
-    assert(proofed.basis === Some("vs_floor"))
-    // line-over-line evidence preserved — it proves the storm was multi-line
-    assert(proofed.minRatio === lol.minRatio && proofed.n === lol.n)
-    assert(proofed.json.contains(""""verdict":"storm"""") &&
-      proofed.json.contains(""""basis":"vs_floor""""))
-    // "faster" is promoted too (previous line even stormier)
-    assert(BenchLine.stormProof(lol.copy(verdict = "faster"), Some(2.0)).verdict === "storm")
-    // "no-baseline" is promoted too — a first line on a boot far above
-    // floor is still a storm observation (r18 advice pinned this so
-    // the Scala emitter and tools/bench_adjudicate.py cannot disagree)
-    val nb = BenchLine.stormProof(lol.copy(verdict = "no-baseline"), Some(2.0))
-    assert(nb.verdict === "storm" && nb.basis === Some("vs_floor"))
-    // in-band / mildly-elevated lines keep their verdict and gain no basis
-    assert(BenchLine.stormProof(lol, Some(1.25)) === lol)
-    assert(BenchLine.stormProof(lol, Some(BenchLine.StormVsFloor)) === lol)
-    // no floor field (subset/failed run) → untouched
-    assert(BenchLine.stormProof(lol, None) === lol)
-    // an already-storm verdict is not re-labeled (its basis stays line-over-line)
-    val storm = lol.copy(verdict = "storm")
-    assert(BenchLine.stormProof(storm, Some(6.26)) === storm)
-  }
-
-  test("no-baseline when boot, fixtures, or comparable-query count disqualify every line") {
-    val hist = BenchLine.parseBaselines(Seq(mkLine(100, 50, "abc", calmQs)))
-    val mins = calmQs.map { case (k, (_, mn)) => k -> mn }
-    // different boot (beyond the 60s stamp tolerance)
-    assert(BenchLine.machineState(hist, Some(500L), "abc", mins).verdict === "no-baseline")
-    // within stamp jitter of the same boot → comparable
-    assert(BenchLine.machineState(hist, Some(55L), "abc", mins).verdict === "calm")
-    // different fixture bytes
-    assert(BenchLine.machineState(hist, Some(50L), "xyz", mins).verdict === "no-baseline")
-    // current boot unknown (no /proc/uptime)
-    assert(BenchLine.machineState(hist, None, "abc", mins).verdict === "no-baseline")
-    // too few comparable queries: baseline meds under the 0.25s floor
-    val tiny = (1 to 5).map(i => s"q$i" -> (0.1, 0.09)).toMap
-    val histTiny = BenchLine.parseBaselines(Seq(mkLine(100, 50, "abc", tiny)))
-    assert(BenchLine.machineState(histTiny, Some(50L), "abc",
-      tiny.map { case (k, (_, mn)) => k -> mn }).verdict === "no-baseline")
-  }
-
-  test("most recent comparable line wins, not the first") {
-    val hist = BenchLine.parseBaselines(Seq(
-      mkLine(100, 50, "abc", calmQs.map { case (k, (md, mn)) => k -> (md, mn * 0.5) }),
-      mkLine(200, 50, "abc", calmQs)))
-    val ms = BenchLine.machineState(hist, Some(50L), "abc",
-      calmQs.map { case (k, (_, mn)) => k -> mn })
-    assert(ms.vsTs === Some(200L) && ms.verdict === "calm")
-  }
-
-  test("probe-flag count: elevated canary or io against the line's own medians") {
-    // 10 calm probes + one canary spike + one io spike
-    val calm = Seq.fill(10)((0.05, 0.1))
-    assert(BenchLine.probeFlagged(calm) === 0)
-    assert(BenchLine.probeFlagged(calm :+ ((0.05 * 2.0, 0.1))) === 1)
-    assert(BenchLine.probeFlagged(calm :+ ((0.05, 0.1 * 2.5))) === 1)
-    assert(BenchLine.probeFlagged(
-      calm ++ Seq((0.12, 0.1), (0.05, 0.25))) === 2)
-    assert(BenchLine.probeFlagged(Nil) === 0)
-  }
-
-  test("failed queries are excluded from floor comparison on either side") {
-    // r12: a JVM without the jdk17 --add-opens set failed q92 in all
-    // reps and the line recorded time-to-fail as a plausible median.
-    // A query named in a line's "failed" field must not contribute a
-    // ratio — from the baseline side (its own field) or the current
-    // run side (the failed-set argument).
-    val failedLine = mkLine(100, 50, "abc", calmQs).replace(
-      """"metric":"total",""",
-      """"metric":"total","failed":{"q3":3},""")
-    val hist = BenchLine.parseBaselines(Seq(failedLine))
-    assert(hist.head.failed === Set("q3"))
-    // q3's baseline min is garbage (say, 100x off); with q3 excluded
-    // the verdict stays calm on the other four... but four < MinRatios,
-    // so first check exclusion drops the ratio count.
-    val mins = calmQs.map { case (k, (_, mn)) => k -> mn }
-    val ms = BenchLine.machineState(hist, Some(50L), "abc", mins)
-    assert(ms.n === 4 && ms.verdict === "no-baseline") // 4 < MinRatios
-    // six queries, one failed → five comparable, verdict computed
-    val sixQs = (1 to 6).map(i => s"q$i" -> (1.0 + i * 0.1, 0.9 * (1.0 + i * 0.1))).toMap
-    val histSix = BenchLine.parseBaselines(Seq(mkLine(100, 50, "abc", sixQs)))
-    val msSix = BenchLine.machineState(histSix, Some(50L), "abc",
-      // q6 failed in the CURRENT run with an absurd time-to-fail min
-      sixQs.map { case (k, (_, mn)) => k -> (if (k == "q6") mn * 50 else mn) },
-      failed = Set("q6"))
-    assert(msSix.n === 5 && msSix.verdict === "calm")
-  }
-
-  test("floor_band: record across ANY boot, ×1.2 width; gated on same " +
-       "fixtures, exact query set, and no failed queries") {
-    // r15 VERDICT item 4: the band anchors a line to the code's
-    // demonstrated floor even when the same-boot machine_state
-    // comparison says nothing. Three committed lines: boot 50 at
-    // min-sum S, boot 999 at 0.8×S (the record — other boot, still
-    // counts), and a line with a failed query (excluded).
-    val keys = calmQs.keySet
-    val minSum = calmQs.values.map(_._2).sum
-    val fast = calmQs.map { case (k, (med, mn)) => k -> (med, mn * 0.8) }
-    val failedLine = mkLine(300, 50, "abc",
-      calmQs.map { case (k, (med, mn)) => k -> (med, mn * 0.1) })
-      .replace(""","sf":"x"""", ""","failed":{"q1":3},"sf":"x"""")
-    val hist = BenchLine.parseBaselines(Seq(
-      mkLine(100, 50, "abc", calmQs),
-      mkLine(200, 999, "abc", fast),
-      failedLine,
-      mkLine(400, 50, "other_fixtures", fast)))
-    val Some((lo, hi, floorTs)) = BenchLine.floorBand(hist, "abc", keys)
-    assert(math.abs(lo - minSum * 0.8) < 1e-9, s"record is the ANY-boot min: $lo")
-    assert(math.abs(hi - lo * BenchLine.MinShift) < 1e-9)
-    // provenance (r15 ADVICE): the emitted band names the line that
-    // set the record, so an obsolete anchor is auditable
-    assert(floorTs === 200L, "floor_ts is the ts of the record line")
-    // different query set (surface changed) ⇒ sums not comparable
-    assert(BenchLine.floorBand(hist, "abc", keys + "q_new").isEmpty)
-    // no comparable fixtures ⇒ absent, never a wrong band
-    assert(BenchLine.floorBand(hist, "zzz", keys).isEmpty)
-    // rebaseline path (r15 ADVICE): Bench filters history by a cutoff
-    // ts before calling floorBand, so excluding the record line's era
-    // re-anchors the band to the post-shift record
-    val Some((lo2, _, ts2)) = BenchLine.floorBand(hist.filter(_.ts >= 50L)
-      .filterNot(_.ts == 200L), "abc", keys)
-    assert(math.abs(lo2 - minSum) < 1e-9 && ts2 === 100L)
-  }
-
-  test("compact line: no per-query map, embeds the full line's floor/" +
-       "failed fragments verbatim, bounded length") {
-    // r15 VERDICT item 1: the driver stores a short stdout tail; the
-    // full line's 113-entry maps push the total out of it. The compact
-    // line is the LAST stdout line and must carry the grading fields
-    // whole while staying far under any plausible tail window.
-    val floorField = ""","floor_band":[32.11,38.53],"floor_ts":1786,"vs_floor":1.21,"cross_floor":38.19,"vs_cross":1.02"""
-    val ln = BenchLine.compactLine(52.17, 38.9, 6,
-      """{"verdict":"calm","min_ratio":0.88,"n":112,"vs_ts":77}""",
-      floorField, "", 113, "3fccd702", 3, ""","ts":100,"boot":50""",
-      "\"/root/testdata/sf0.1\"")
-    val j = org.json4s.jackson.JsonMethods.parse(ln) // must be valid JSON
-    val fields = j.asInstanceOf[org.json4s.JObject].obj.map(_._1).toSet
-    assert(!fields.contains("queries") && !fields.contains("spread") &&
-      !fields.contains("ambient"), "compact line has no per-query maps")
-    assert(fields.contains("total_min") && fields.contains("machine_state") &&
-      fields.contains("floor_band") && fields.contains("vs_floor") &&
-      fields.contains("n_queries") && fields.contains("compact"))
-    assert(ln.length < 600, s"compact line must fit any stdout tail: ${ln.length}")
-    // failed runs carry the failed map but (per Bench's gating) an
-    // empty floor fragment — the compact builder passes both through
-    val lnF = BenchLine.compactLine(10.0, 8.0, 0,
-      """{"verdict":"no-baseline","n":0}""", "", ""","failed":{"q92":3}""",
-      113, "abc", 3, ""","ts":1""", "\"x\"", ""","only":"q92"""")
-    val jf = org.json4s.jackson.JsonMethods.parse(lnF)
-    val ff = jf.asInstanceOf[org.json4s.JObject].obj.toMap
-    assert(ff.contains("failed") && ff.contains("only") && !ff.contains("floor_band"))
-  }
-
-  test("cross_floor: per-query minima combine ACROSS lines; failed and " +
-       "uncovered queries gate it") {
-    // r15 quiesce experiment: aged-boot lines inflate via stall
-    // SAMPLING — each run stalls a different subset — so the honest
-    // code floor is the per-query min across lines, not any single
-    // line's min-sum. Two lines, each with one query 2× slower than
-    // the other line's reading: the cross floor takes the better half
-    // of each and beats both single-line sums.
-    val keys = calmQs.keySet
-    val slowQ1 = calmQs.map { case (k, (md, mn)) =>
-      k -> (md, if (k == "q1") mn * 2 else mn) }
-    val slowQ2 = calmQs.map { case (k, (md, mn)) =>
-      k -> (md, if (k == "q2") mn * 2 else mn) }
-    val hist = BenchLine.parseBaselines(Seq(
-      mkLine(100, 50, "abc", slowQ1), mkLine(200, 999, "abc", slowQ2)))
-    val trueFloor = calmQs.values.map(_._2).sum
-    val Some(cf) = BenchLine.crossFloor(hist, "abc", keys)
-    assert(math.abs(cf - trueFloor) < 1e-9,
-      s"cross floor combines the best per-query mins: $cf vs $trueFloor")
-    assert(hist.map(_.mins.values.sum).forall(_ > cf + 1e-9),
-      "every single line's min-sum sits above the cross floor")
-    // a query failed in a line: that line contributes no floor for it,
-    // but its OTHER queries still count
-    val failedLine = mkLine(300, 50, "abc",
-      calmQs.map { case (k, (md, mn)) => k -> (md, mn * 0.01) })
-      .replace(""","sf":"x"""", ""","failed":{"q1":3},"sf":"x"""")
-    val hist2 = BenchLine.parseBaselines(Seq(mkLine(100, 50, "abc", calmQs), failedLine))
-    val Some(cf2) = BenchLine.crossFloor(hist2, "abc", keys)
-    // q1's 0.01× time-to-fail min is ignored; the others take 0.01×
-    val expected = calmQs("q1")._2 + (trueFloor - calmQs("q1")._2) * 0.01
-    assert(math.abs(cf2 - expected) < 1e-9)
-    // any current key with NO committed floor ⇒ absent, never partial
-    assert(BenchLine.crossFloor(hist, "abc", keys + "q_new").isEmpty)
-    assert(BenchLine.crossFloor(hist, "zzz", keys).isEmpty)
-    assert(BenchLine.crossFloor(hist, "abc", Set.empty).isEmpty)
-  }
-
-  test("perQueryFloors: per-query min across comparable lines, failed " +
-       "and foreign-fixture readings excluded") {
-    val slowQ1 = calmQs.map { case (k, (md, mn)) =>
-      k -> (md, if (k == "q1") mn * 2 else mn) }
-    val slowQ2 = calmQs.map { case (k, (md, mn)) =>
-      k -> (md, if (k == "q2") mn * 2 else mn) }
-    // q3 "failed" in a third line with an absurdly small time-to-fail
-    // min — it must NOT become q3's floor; that line's OTHER queries
-    // (clean, 10x slow) still contribute, they just lose to the better
-    // committed readings (per-query exclusion, not per-line)
-    val failedLine = mkLine(300, 50, "abc",
-      calmQs.map { case (k, (md, mn)) =>
-        k -> (md, if (k == "q3") mn * 0.01 else mn * 10) })
-      .replace(""","sf":"x"""", ""","failed":{"q3":3},"sf":"x"""")
-    val foreign = mkLine(400, 50, "zzz",
-      calmQs.map { case (k, (md, mn)) => k -> (md, mn * 0.001) })
-    val hist = BenchLine.parseBaselines(Seq(
-      mkLine(100, 50, "abc", slowQ1), mkLine(200, 999, "abc", slowQ2),
-      failedLine, foreign))
-    val floors = BenchLine.perQueryFloors(hist, "abc")
-    // q1/q2: each line's 2x reading loses to the other line's clean
-    // min; q3: the failed 0.01x is ignored, floor is the clean 1x;
-    // the foreign-fixture 0.001x readings never appear
-    assert(floors === calmQs.map { case (k, (_, mn)) => k -> mn })
-    assert(BenchLine.perQueryFloors(hist, "nope") === Map.empty)
-  }
-
-  test("rerepTargets: min >1.5x committed floor; sub-MinSecs floors, " +
-       "failed and floorless queries excluded") {
-    // floors: 1.0s for q1..q3, 0.1s (sub-MinSecs jitter) for q5, none
-    // for q4. NOT probe-gated (the r19 sketch's AND was measured dead:
-    // probes sample BEFORE the rep loop, so a wave during the loop
-    // never coincides with its own flag — live intersection was empty
-    // at vs_floor 1.44).
-    val floors = Map("q1" -> 1.0, "q2" -> 1.0, "q3" -> 1.0, "q5" -> 0.1)
-    val mins = Seq(
-      "q1" -> 2.0,   // >1.5x floor                       => target
-      "q2" -> 1.4,   // under the bar (ambiguity zone)    => no
-      "q3" -> 1.51,  // just over                         => target
-      "q4" -> 2.0,   // no committed floor                => no
-      "q5" -> 0.9)   // 9x its floor, but floor < MinSecs => no
-    assert(BenchLine.rerepTargets(mins, floors, Set.empty) === Seq("q1", "q3"))
-    // a failed query is never re-repped
-    assert(BenchLine.rerepTargets(mins, floors, Set("q1")) === Seq("q3"))
-    // order is input order, not alphabetical: q3 before q1 stays q3-first
-    val twoUp = Seq("q3" -> 2.0, "q1" -> 2.0)
-    assert(BenchLine.rerepTargets(twoUp, floors, Set.empty) === Seq("q3", "q1"))
-    assert(BenchLine.rerepTargets(Seq.empty, floors, Set.empty) === Seq.empty)
-  }
-
-  test("compact line carries the re-rep COUNT (bounded), not the map") {
-    val ln = BenchLine.compactLine(52.17, 38.9, 6,
-      """{"verdict":"calm","n":112}""", "", "", 113, "3fccd702", 3,
-      ""","ts":100""", "\"x\"", rerepped = 17)
-    val j = org.json4s.jackson.JsonMethods.parse(ln)
-    val fields = j.asInstanceOf[org.json4s.JObject].obj.toMap
-    assert(fields.get("rerep").contains(org.json4s.JInt(17)))
-    assert(ln.length < 600)
-    // absent when nothing was re-repped — the common calm case
-    val calm = BenchLine.compactLine(52.17, 38.9, 6,
-      """{"verdict":"calm","n":112}""", "", "", 113, "3fccd702", 3,
-      ""","ts":100""", "\"x\"")
-    assert(!calm.contains("rerep"))
-  }
-
-  test("machine-state json fragment omits absent sub-fields") {
-    assert(BenchLine.MachineState("no-baseline", None, 0, None).json ===
-      """{"verdict":"no-baseline","n":0}""")
-    assert(BenchLine.MachineState("calm", Some(1.034), 52, Some(77L)).json ===
-      """{"verdict":"calm","min_ratio":1.03,"n":52,"vs_ts":77}""")
+  test("median is the upper-mid element") {
+    assert(Bench.median(Seq(3.0, 1.0, 2.0)) === 2.0)
+    assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) === 3.0)
+    assert(Bench.median(Seq(7.0)) === 7.0)
   }
 }

@@ -35,8 +35,8 @@ object DevScaleLadder {
       catch { case _: Throwable => () }
     }
 
-    // shared derivation with Bench + BenchLine (one median rule)
-    def median(xs: Seq[Double]): Double = BenchLine.median(xs)
+    // one median rule with Bench
+    def median(xs: Seq[Double]): Double = Bench.median(xs)
     // (samples, failed-rep count): a failed rep's elapsed is timed
     // (spread contract unchanged for clean runs) but the count travels
     // into the line's "failed" field — same r12 rule as Bench.scala,
@@ -55,13 +55,6 @@ object DevScaleLadder {
       }
       (samples, fails)
     }
-    // the ratio table is as exposed to ambient load as the bench is —
-    // an episode during ONE rung's reps silently corrupts a ratio, so
-    // every ladder row carries the same per-item probe stamp as bench
-    // lines (AmbientProbes.scala; bench_adjudicate.py's reading rule)
-    val probes = new AmbientProbes(spark)
-    probes.warmup()
-
     // SPARK_GRAFT_LADDER_WARM=1: one UNTIMED rep of each item before
     // its timed reps, so the first timed item (historically `entry`)
     // doesn't absorb its own operators' codegen/JIT — with it, ladder
@@ -70,10 +63,7 @@ object DevScaleLadder {
     // and the warm-up bias cancels in the ratios either way (same on
     // both rungs); flip it only for runs whose ABSOLUTES you need.
     val warm = sys.env.get("SPARK_GRAFT_LADDER_WARM").contains("1")
-    // samples + the probe readings taken around them
-    final case class Item(samples: Seq[Double], canary: Double,
-                          io: Double, gcMs: Long, fails: Int)
-    def timed(name: String, fn: () => Long): Item = {
+    def timed(name: String, fn: () => Long): (Seq[Double], Int) = {
       if (warm) {
         // never silent: a failed warm rep means the first TIMED rep
         // re-absorbs cold-start cost, so a run whose absolutes matter
@@ -82,11 +72,7 @@ object DevScaleLadder {
           System.err.println(s"[ladder] warm rep for $name failed: ${e.getMessage}")
         }
       }
-      val cn = probes.canary()
-      val ioT = probes.ioProbe()
-      val gc0 = probes.gcMillis()
-      val (samples, fails) = time(fn)
-      Item(samples, cn, ioT, probes.gcMillis() - gc0, fails)
+      time(fn)
     }
     val entryItem =
       if (sys.env.get("SPARK_GRAFT_SF_DIR").contains(sfDir))
@@ -102,24 +88,17 @@ object DevScaleLadder {
         q -> timed(q, () => queries(q)(spark, sfDir).count())
       }
     def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
-    val body = rows.map { case (name, it) =>
-      val s = it.samples
-      s"""\"$name\":{\"min\":${r4(s.min)},\"med\":${r4(median(s))},\"max\":${r4(s.max)},""" +
-        s"""\"canary\":${r4(it.canary)},\"io\":${r4(it.io)},\"gc\":${it.gcMs}}"""
+    val body = rows.map { case (name, (s, _)) =>
+      s"""\"$name\":{\"min\":${r4(s.min)},\"med\":${r4(median(s))},\"max\":${r4(s.max)}}"""
     }.mkString("{", ",", "}")
-    // same self-adjudication stamps as bench lines: a ladder table is
-    // only comparable to another if both ran on the same fixture
-    // bytes, and its ABSOLUTES only within one boot. The ts/boot
-    // derivation is the SHARED BenchStamp helper (r11 ADVICE: the
-    // block was duplicated verbatim from Bench.scala, letting the
-    // derivation and the adjudicator's 60s tolerance drift apart).
-    val (nowSec, bootOpt) = BenchStamp.stamp()
     // item names are registry keys / "entry" — no escaping needed
     val failedField = {
-      val f = rows.collect { case (n, it) if it.fails > 0 => s""""$n":${it.fails}""" }
+      val f = rows.collect { case (n, (_, fails)) if fails > 0 => s""""$n":$fails""" }
       if (f.isEmpty) "" else f.mkString(""","failed":{""", ",", "}")
     }
-    println(s"""{"ladder":$body,"sf":"$sfDir","reps":$reps$failedField${BenchStamp.fragment(nowSec, bootOpt)},"fixtures":"${Fixtures.fingerprint(sfDir)}"}""")
+    // a ladder table is only comparable to another if both ran on the
+    // same fixture bytes
+    println(s"""{"ladder":$body,"sf":"$sfDir","reps":$reps$failedField,"ts":${System.currentTimeMillis() / 1000},"fixtures":"${Fixtures.fingerprint(sfDir)}"}""")
     spark.stop()
   }
 }

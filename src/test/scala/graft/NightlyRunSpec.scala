@@ -59,6 +59,20 @@ class NightlyRunSpec extends SparkSpec {
         Files.getLastModifiedTime(p).toMillis)
       .toMap
 
+  /** The slice's swapped `sale_d=` dirs each hold exactly one parquet
+    * file: the staging write goes through the skew-bounded
+    * `LayoutOps.partitionedOverwrite`, which keeps a small date in one
+    * task. */
+  private def assertOneFilePerDir(martDir: String, lo: String, hi: String): Unit = {
+    val days = java.time.LocalDate.parse(lo).toEpochDay to
+      java.time.LocalDate.parse(hi).toEpochDay
+    days.map(java.time.LocalDate.ofEpochDay).foreach { d =>
+      val files = Option(new java.io.File(martDir, s"sale_d=$d").listFiles())
+        .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
+      assert(files.length === 1, s"sale_d=$d holds ${files.map(_.getName).toSeq}")
+    }
+  }
+
   /** Count every job started during `body` via the shared
     * [[JobCounter]] (sentinel-tagged FIFO settle — r20 ADVICE item 4
     * replaced three local copies of this helper). */
@@ -181,6 +195,7 @@ class NightlyRunSpec extends SparkSpec {
       // date-partitioned layout, one dir per slice day
       assert(partitionFiles(martDir).keys.map(_.split('/').head).toSet ===
         Set("sale_d=2024-03-01", "sale_d=2024-03-02"))
+      assertOneFilePerDir(martDir, "2024-03-01", "2024-03-02")
 
       // ---- tick 2: slice B must not touch slice A's partitions ----
       val filesA = partitionFiles(martDir)
@@ -196,6 +211,7 @@ class NightlyRunSpec extends SparkSpec {
       val filesAfterB = partitionFiles(martDir)
       assert(filesAfterB.view.filterKeys(filesA.contains).toMap === filesA,
         "a tick must not rewrite, relist, or touch partitions outside its slice")
+      assertOneFilePerDir(martDir, "2024-03-03", "2024-03-04")
 
       // ---- tick 3: steady-state re-send of slice B, revised figures ----
       val filesANow = partitionFiles(martDir).view
@@ -215,6 +231,7 @@ class NightlyRunSpec extends SparkSpec {
       val kB = mart3.filter(col("sale_d") >= lit("2024-03-03").cast("date"))
         .select(min("k"), max("k")).as[(Long, Long)].head()
       assert(kB._1 >= 10L, s"revised measures must overwrite (latest wins): $kB")
+      assertOneFilePerDir(martDir, "2024-03-03", "2024-03-04")
       // ...and slice A's original rows are bit-untouched
       assert(partitionFiles(martDir).view.filterKeys(filesA.contains).toMap
         === filesANow, "steady-state tick leaked writes into a foreign slice")

@@ -452,6 +452,23 @@ class PlanSpec extends SparkSpec {
       "the recursive reference must feed the loop, not a materialized copy")
   }
 
+  test("q105 leaves the caller's recursion row guard and temp views untouched") {
+    // no query may change session state that outlives it (ROADMAP aim 3)
+    val key = "spark.sql.cteRecursionRowLimit"
+    val before = spark.conf.getOption(key)
+    val viewsBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    val df = SparkEntry.queries("q105_recursive_cte")(spark, sf)
+    assert(spark.conf.getOption(key) === before, "build leaked the row guard")
+    // ...while the frame's own session carries it into execution
+    assert(df.sparkSession.conf.get(key) === Int.MaxValue.toString)
+    // every customer is its own depth-0 ancestor, so the rollup has one
+    // row per distinct key: 150 at sf0.001, as before the child session
+    assert(df.count() === 150L)
+    assert(spark.conf.getOption(key) === before, "count leaked the row guard")
+    assert(spark.catalog.listTables().collect().map(_.name).toSet === viewsBefore,
+      "q105's temp view leaked into the caller's session")
+  }
+
   test("q110 lateral top-N: decorrelated to WindowGroupLimit + equi-join, never a per-row nested loop") {
     val p = plan("q110_lateral_topn")
     assert(p.contains("WindowGroupLimit"),

@@ -4,8 +4,9 @@ import graft.ops.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Canonical-equivalence contracts (round 17 unicode probe,
-  * tools/unicode_probe.py). The probe planted NFC / NFD spellings of
+/** Canonical-equivalence contracts (round 17 unicode probe, now the
+  * edge sweep's `unicode` variant in tools/edge_fixtures.py). The
+  * probe planted NFC / NFD spellings of
   * the SAME visual string plus zero-width weaves into every
   * string-bearing table and ran all 113 queries through the unchanged
   * DuckDB gate: ALL GREEN on the first run, zero divergences — both

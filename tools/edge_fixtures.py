@@ -408,8 +408,7 @@ def emptystr_row(full):
 
 def nullkey_row(full):
     """Every `*key`/`*_id` column NULL, payloads untouched — the
-    promoted r15 probe row (tools/nullkeys_probe.py is the standalone
-    runner; this is the sweep's copy, kept trivially identical)."""
+    promoted r15 probe row, run as the sweep's `nullkeys` variant."""
     out = dict(full)
     for k in out:
         if k.endswith(("key", "_id")) or k == "event_id":
@@ -418,10 +417,9 @@ def nullkey_row(full):
 
 
 def nulltime_rows():
-    """table -> rows for the `nulltime` variant (promoted r18 probe —
-    tools/nulltime_probe.py is the standalone runner; this is the
-    sweep's copy). NULL and boundary TIME values with live payloads,
-    plus engineered rank ties: no other variant nulls a timestamp, so
+    """table -> rows for the `nulltime` variant (promoted r18 probe):
+    NULL and boundary TIME values with live payloads, plus engineered
+    rank ties: no other variant nulls a timestamp, so
     Spark's bare-ASC NULLS-FIRST vs DuckDB's NULLS-LAST divergence in
     window order keys — and the INT96→ns wrap past 2262 in pyarrow
     readers — was unexercised until this shape found 13 of them."""

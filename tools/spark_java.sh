@@ -20,8 +20,7 @@
 # Usage: tools/spark_java.sh [java-opts...] <MainClass> [args...]
 #   e.g. env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
 #          tools/spark_java.sh -Xmx16g graft.Bench
-#   (compose with tools/idle_run.sh for measurements:
-#    tools/idle_run.sh -- env ... tools/spark_java.sh -Xmx16g graft.Bench)
+# Perf claims use perfbench/ (perfbench/README.md), not this launcher.
 set -eu
 cd "$(dirname "$0")/.."
 PKGS=(
